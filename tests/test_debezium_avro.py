@@ -432,3 +432,8 @@ def test_compiled_codecs_match_interpreters_exactly():
     ]:
         assert (to_native_c(payload)
                 == ConnectToAvro().to_native(cschema, payload))
+
+    # the compiled union encoder handles a null and one type, no more
+    for union in (["null", "string", "long"], ["string", "long"], ["null"]):
+        with pytest.raises(ValueError, match="avro union"):
+            compile_avro_encoder(union, named)

@@ -282,3 +282,27 @@ def test_put_files_multipart_survives_lost_complete_response(spark):
             assert got.decode().splitlines() == [v for _, _, v in rows]
     finally:
         failpoint.disable_all()
+
+
+def test_client_pool_evicts_least_recently_used(monkeypatch):
+    from ticdc_spark.sinks import s3_live
+
+    class _Client:
+        closed = False
+
+        def close(self):
+            self.closed = True
+
+    monkeypatch.setattr(s3_live, "_CLIENT_POOL", type(s3_live._CLIENT_POOL)())
+    monkeypatch.setattr(s3_live, "_client", lambda *a: _Client())
+    first = s3_live._pooled_client("ep-0", "k", "s", "s3")
+    for i in range(1, 65):
+        s3_live._pooled_client(f"ep-{i}", "k", "s", "s3")
+    # a hit refreshes ep-0, so the pool's oldest entry is now ep-1
+    assert s3_live._pooled_client("ep-0", "k", "s", "s3") is first
+    newest = s3_live._pooled_client("ep-new", "k", "s", "s3")
+    # the pool is full: the next insert evicts ep-1, never the newest
+    s3_live._pooled_client("ep-next", "k", "s", "s3")
+    assert s3_live._pooled_client("ep-new", "k", "s", "s3") is newest
+    assert s3_live._pooled_client("ep-0", "k", "s", "s3") is first
+    assert not newest.closed and not first.closed

@@ -345,7 +345,10 @@ def avro_decode(buf: bytes, pos: int, schema, named: dict):
 def compile_avro_encoder(schema, named: dict):
     """avro_encode specialized to ``schema`` -> fn(value) -> bytes."""
     schema = _resolve(schema, named)
-    if isinstance(schema, list):  # union — all are ["null", T] here
+    if isinstance(schema, list):
+        if len(schema) != 2 or schema.count("null") != 1:
+            raise ValueError(
+                f"avro union must be a null and one type, got {schema!r}")
         null_tag = zigzag_encode(schema.index("null"))
         bi, branch = next((i, b) for i, b in enumerate(schema)
                           if b != "null")

@@ -21,6 +21,8 @@ import hashlib
 import hmac
 import struct
 
+from ticdc_spark.endpoint import recv_exact
+
 # capability flags (protocol constants from the public docs)
 CLIENT_LONG_PASSWORD = 0x00000001
 CLIENT_CONNECT_WITH_DB = 0x00000008
@@ -73,25 +75,15 @@ def read_packet(sock) -> tuple[int, bytes] | None:
         if payload is None:
             return None
         return hdr[3], payload
-    hdr = _recv_exact(sock, 4)
+    hdr = recv_exact(sock, 4)
     if hdr is None:
         return None
     length = hdr[0] | (hdr[1] << 8) | (hdr[2] << 16)
     seq = hdr[3]
-    payload = _recv_exact(sock, length) if length else b""
+    payload = recv_exact(sock, length) if length else b""
     if payload is None:
         return None
     return seq, payload
-
-
-def _recv_exact(sock, n: int) -> bytes | None:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return bytes(buf)
 
 
 # ---------------------------------------------------------------- lenenc

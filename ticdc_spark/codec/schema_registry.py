@@ -33,6 +33,8 @@ import urllib.request
 import uuid as _uuid
 from dataclasses import dataclass, field
 
+from ticdc_spark.endpoint import Endpoint, QuietHandler
+
 
 # ---------------------------------------------------------------------------
 # Subject naming strategies (helper.go:143)
@@ -305,32 +307,20 @@ class ConfluentSchemaManager:
 # Stdlib HTTP server over the in-memory registry (socket-level tests)
 # ---------------------------------------------------------------------------
 
-class registry_http_server:
+class registry_http_server(Endpoint):
     """Context manager: serve an InMemoryConfluentRegistry over real HTTP
     on 127.0.0.1:<ephemeral>; yields the base URL."""
 
     def __init__(self, registry: InMemoryConfluentRegistry) -> None:
+        super().__init__()
         self.registry = registry
 
-    def __enter__(self) -> str:
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        registry = self.registry
-
-        class Handler(BaseHTTPRequestHandler):
-            disable_nagle_algorithm = True  # no 40ms delayed-ACK stalls
-
+        class Handler(QuietHandler):
             def _serve(self, method: str) -> None:
-                n = int(self.headers.get("Content-Length") or 0)
-                body = self.rfile.read(n).decode() if n else None
+                body = self.read_body().decode() or None
                 status, payload = registry.handle(method, self.path, body)
-                data = json.dumps(payload).encode()
-                self.send_response(status)
-                self.send_header("Content-Type",
-                                 "application/vnd.schemaregistry.v1+json")
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
+                self.reply(status, json.dumps(payload).encode(),
+                           "application/vnd.schemaregistry.v1+json")
 
             def do_GET(self):  # noqa: N802
                 self._serve("GET")
@@ -341,24 +331,11 @@ class registry_http_server:
             def do_DELETE(self):  # noqa: N802
                 self._serve("DELETE")
 
-            def log_message(self, *a):  # quiet
-                pass
+        self._listen(Handler)
 
-        class _Srv(ThreadingHTTPServer):
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._srv = _Srv(("127.0.0.1", 0), Handler)
-        self._thread = threading.Thread(target=self._srv.serve_forever, daemon=True)
-        self._thread.start()
-        host, port = self._srv.server_address[:2]
-        return f"http://{host}:{port}"
-
-    def __exit__(self, *exc) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
-        self._thread.join(timeout=5)
+    def __enter__(self) -> str:
+        self.start()
+        return f"http://{self.host}:{self.port}"
 
 
 # ---------------------------------------------------------------------------

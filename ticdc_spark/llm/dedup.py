@@ -167,11 +167,12 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8,
     recall-optimizing candidate generator, not a different metric).
 
     Skew guard (the 100 TB shape, same pattern as
-    :func:`ngram_jaccard_pairs_pruned`): band buckets with occupancy
-    above ``max_bucket`` are dropped from candidate generation via a
-    broadcast anti-join against the (tiny) hot-bucket set, so the
-    self-join is skew-free by construction — no single (band, bucket)
-    key can exceed max_bucket²/2 pairs.
+    :func:`ngram_jaccard_pairs_pruned`): one groupBy on (band, bucket)
+    collects each bucket's sorted member list with ``collect_list``, and
+    a ``size(list) <= max_bucket`` filter drops the hot buckets before
+    pairs are generated — no single (band, bucket) key can yield more
+    than max_bucket²/2 pairs.  The list of a hot bucket is still built
+    in full before the filter drops it.
 
     The shingle table feeds three subtrees (signatures + both sides of
     the verify join) — cache it so the split/slice work runs once."""

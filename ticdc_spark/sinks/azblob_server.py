@@ -31,8 +31,9 @@ import base64
 import hashlib
 import hmac
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, quote, unquote, urlsplit
+
+from ticdc_spark.endpoint import Endpoint, QuietHandler
 
 _XML = 'application/xml'
 
@@ -75,31 +76,14 @@ def sign(key_b64: str, sts: str) -> str:
     return base64.b64encode(mac.digest()).decode()
 
 
-class MiniAzureBlobServer:
+class MiniAzureBlobServer(Endpoint):
     def __init__(self, account: str = "cdcaccount",
                  key_b64: str | None = None, host: str = "127.0.0.1",
                  tls: bool = False, mutual_tls: bool = False):
-        # tls=True: an https:// endpoint (fresh self-signed cert, pinned
-        # via server.ca_pem); mutual_tls demands a chained client cert
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._ca_key = None
-        self._tls_ctx = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
+        super().__init__(host, tls, mutual_tls)
         self.account = account
         self.key_b64 = key_b64 or base64.b64encode(
             b"azure-test-shared-key-32-bytes!!").decode()
-        self.host = host
         self.containers: dict[str, dict[str, bytes]] = {}
         # staged (uncommitted) blocks: (container, blob) -> {block_id: bytes}
         self.uncommitted: dict[tuple[str, str], dict[str, bytes]] = {}
@@ -109,27 +93,14 @@ class MiniAzureBlobServer:
         self._lock = threading.Lock()
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(QuietHandler):
             protocol_version = "HTTP/1.1"
-            # one response can flush in 2 TCP segments (headers,
-            # body); with Nagle on, the second segment waits for the
-            # client's delayed ACK — a flat ~40ms per request.
-            disable_nagle_algorithm = True
-
-            def log_message(self, *a):
-                pass
 
             def _send(self, status: int, body: bytes = b"",
                       ctype: str = _XML) -> None:
-                self.send_response(status)
-                if body:
-                    self.send_header("Content-Type", ctype)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                if body:
-                    self.wfile.write(body)
+                self.reply(status, body, ctype if body else None)
 
-            def _authed(self, body_len: int) -> bool:
+            def _authed(self) -> bool:
                 u = urlsplit(self.path)
                 q = {k: v[-1] for k, v in
                      parse_qs(u.query, keep_blank_values=True).items()}
@@ -144,11 +115,9 @@ class MiniAzureBlobServer:
                 return False
 
             def do_PUT(self):
-                n = int(self.headers.get("Content-Length", 0))
-                if not self._authed(n):
-                    self.rfile.read(n)
+                body = self.read_body()
+                if not self._authed():
                     return
-                body = self.rfile.read(n)
                 u = urlsplit(self.path)
                 q = {k: v[-1] for k, v in
                      parse_qs(u.query, keep_blank_values=True).items()}
@@ -212,7 +181,7 @@ class MiniAzureBlobServer:
                 self._send(201)
 
             def do_GET(self):
-                if not self._authed(0):
+                if not self._authed():
                     return
                 u = urlsplit(self.path)
                 q = {k: v[-1] for k, v in
@@ -278,46 +247,12 @@ class MiniAzureBlobServer:
                                            b"</Code></Error>")
                 self._send(200, body, ctype="application/octet-stream")
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from executor tasks; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = _Srv((host, 0), Handler)
-        if self._tls_ctx is not None:
-            self._server.socket = self._tls_ctx.wrap_socket(
-                self._server.socket, server_side=True)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True)
+        self._listen(Handler)
 
     @property
     def endpoint(self) -> str:
         scheme = "https" if self.tls else "http"
         return f"{scheme}://{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("server is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name,
-                                  client=True)
-
-    def start(self) -> "MiniAzureBlobServer":
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
 
 
 class AzBlobClient:

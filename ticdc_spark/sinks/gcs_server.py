@@ -29,34 +29,17 @@ import base64
 import hashlib
 import json
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, quote, unquote, urlsplit
 
+from ticdc_spark.endpoint import Endpoint, QuietHandler
 
-class MiniGCSServer:
+
+class MiniGCSServer(Endpoint):
     def __init__(self, token: str = "gcs-test-token",
                  host: str = "127.0.0.1", tls: bool = False,
                  mutual_tls: bool = False):
-        # tls=True: an https:// endpoint with a fresh self-signed cert
-        # (clients pin it via server.ca_pem); mutual_tls additionally
-        # demands a client certificate chained to the server's CA
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._ca_key = None
-        self._tls_ctx = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
+        super().__init__(host, tls, mutual_tls)
         self.token = token
-        self.host = host
         self.buckets: dict[str, dict[str, bytes]] = {}
         # resumable sessions: upload_id -> {bucket, name, data, total}
         self.sessions: dict[str, dict] = {}
@@ -64,30 +47,11 @@ class MiniGCSServer:
         self._lock = threading.Lock()
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(QuietHandler):
             protocol_version = "HTTP/1.1"
-            # one response can flush in 2 TCP segments (headers,
-            # body); with Nagle on, the second segment waits for the
-            # client's delayed ACK — a flat ~40ms per request.
-            disable_nagle_algorithm = True
-
-            def log_message(self, *a):  # quiet
-                pass
 
             def _json(self, status: int, obj) -> None:
-                body = json.dumps(obj).encode()
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def _bytes(self, status: int, body: bytes) -> None:
-                self.send_response(status)
-                self.send_header("Content-Type", "application/octet-stream")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self.reply(status, json.dumps(obj).encode(), "application/json")
 
             def _err(self, status: int, message: str) -> None:
                 self._json(status, {"error": {"code": status,
@@ -104,8 +68,7 @@ class MiniGCSServer:
                 # drain the body FIRST: an early 401 must not leave the
                 # payload unread on the keep-alive socket (the next
                 # request would parse it as garbage)
-                n = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(n)
+                body = self.read_body()
                 if not self._authed():
                     return
                 u = urlsplit(self.path)
@@ -134,11 +97,7 @@ class MiniGCSServer:
                         loc = (f"{scheme}://{srv.host}:{srv.port}"
                                f"/upload/storage/v1/b/{bucket}/o"
                                f"?uploadType=resumable&upload_id={uid}")
-                        self.send_response(200)
-                        self.send_header("Location", loc)
-                        self.send_header("Content-Length", "0")
-                        self.end_headers()
-                        return
+                        return self.reply(200, headers={"Location": loc})
                     if q.get("uploadType") != "media" or "name" not in q:
                         return self._err(400, "media upload needs "
                                               "uploadType=media&name=")
@@ -156,8 +115,7 @@ class MiniGCSServer:
             def do_PUT(self):
                 # resumable-session chunk or status probe; the session
                 # id IS the credential (no Bearer re-check, per spec)
-                n = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(n)
+                body = self.read_body()
                 u = urlsplit(self.path)
                 q = {k: v[-1] for k, v in parse_qs(u.query).items()}
                 uid = q.get("upload_id", "")
@@ -225,12 +183,9 @@ class MiniGCSServer:
 
             def _resumable_progress(self, sess: dict) -> None:
                 """308 Resume Incomplete with the received Range."""
-                self.send_response(308)
                 received = len(sess["data"])
-                if received:
-                    self.send_header("Range", f"bytes=0-{received - 1}")
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self.reply(308, headers={"Range": f"bytes=0-{received - 1}"}
+                           if received else None)
 
             def do_GET(self):
                 if not self._authed():
@@ -277,49 +232,16 @@ class MiniGCSServer:
                             body = srv.buckets.get(bucket, {}).get(name)
                         if body is None:
                             return self._err(404, f"No such object: {name}")
-                        return self._bytes(200, body)
+                        return self.reply(200, body,
+                                          "application/octet-stream")
                 self._err(404, "unknown path")
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from executor tasks; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = _Srv((host, 0), Handler)
-        if self._tls_ctx is not None:
-            self._server.socket = self._tls_ctx.wrap_socket(
-                self._server.socket, server_side=True)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True)
+        self._listen(Handler)
 
     @property
     def endpoint(self) -> str:
         scheme = "https" if self.tls else "http"
         return f"{scheme}://{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("server is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name,
-                                  client=True)
-
-    def start(self) -> "MiniGCSServer":
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
 
 
 class GCSClient:

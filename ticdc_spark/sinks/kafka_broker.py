@@ -18,13 +18,12 @@ bytes target a real cluster; nothing here sits on the data path.
 
 from __future__ import annotations
 
-import socket
-import socketserver
 import struct
 import threading
 import time
 
 from ticdc_spark.codec import kafka_wire as kw
+from ticdc_spark.endpoint import Endpoint, recv_exact
 
 
 class OutOfOrderSequence(Exception):
@@ -184,7 +183,7 @@ class _Log:
 #  producerEpoch 2 | baseSequence 4  => 8+4+4+1+4+2+4+8+8+8+2+4 = 57
 
 
-class KafkaBroker:
+class KafkaBroker(Endpoint):
     """Threaded single-node broker bound to 127.0.0.1:<ephemeral port>."""
 
     def __init__(self, host: str = "127.0.0.1", default_partitions: int = 4,
@@ -198,27 +197,10 @@ class KafkaBroker:
                  flexible_only: bool = False,
                  gssapi_service: tuple[str, str, str] | None = None,
                  auto_create_topics: bool = True):
-        # tls=True: an SSL (or SASL_SSL, with sasl_users) listener — a
-        # fresh self-signed cert; clients pin it via broker.ca_pem.
-        # mutual_tls=True additionally demands a client certificate
-        # chained to the broker's CA (the reference Credential's
-        # cert-path/key-path half); mint one via issue_client_cert().
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._tls_ctx = None
-        self._ca_key = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
-        self.host = host
+        # tls=True: an SSL (or SASL_SSL, with sasl_users) listener;
+        # mutual_tls=True is the reference Credential's cert-path/key-path
+        # half (see Endpoint for the TLS modes)
+        super().__init__(host, tls, mutual_tls)
         self.default_partitions = default_partitions
         # advertised version ranges: classic fixed versions PLUS the
         # flexible pair (Produce v9 / Fetch v12 / ListOffsets v7,
@@ -295,86 +277,32 @@ class KafkaBroker:
         # new topics inherit max.message.bytes from it like a real broker
         self.broker_configs = {"message.max.bytes": "1048588"}
         self.topic_configs: dict[str, dict[str, str]] = {}
-        broker = self
+        self._listen()
 
-        class Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                import socket as _s
+    def _serve(self, sock) -> None:
+        from ticdc_spark import failpoint
 
-                from ticdc_spark import failpoint
-
-                # multi-frame responses must not wait out delayed ACKs
-                self.request.setsockopt(_s.IPPROTO_TCP, _s.TCP_NODELAY, 1)
-
-                conn_state = {"authenticated": broker.sasl_users is None,
-                              "mechanism": None, "scram": None}
-                sock = self.request
-                if broker._tls_ctx is not None:
-                    import ssl as _ssl
-
-                    try:
-                        sock = broker._tls_ctx.wrap_socket(sock, server_side=True)
-                    except (_ssl.SSLError, OSError):
-                        return  # failed handshake (plaintext client, bad ciphers)
-                try:
-                    while True:
-                        hdr = _recv_exact(sock, 4)
-                        if hdr is None:
-                            return
-                        (size,) = struct.unpack(">i", hdr)
-                        payload = _recv_exact(sock, size)
-                        if payload is None:
-                            return
-                        # chaos hook: kill the connection mid-conversation
-                        # (arm `kafka/drop-connection` with N*return(1));
-                        # producers must retry/reconnect like sarama's
-                        # MaxRetry budget (`pkg/sink/kafka` defaultMaxRetry)
-                        if failpoint.inject("kafka/drop-connection"):
-                            return
-                        resp = broker._dispatch(payload, conn_state)
-                        sock.sendall(resp)
-                except (ConnectionResetError, BrokenPipeError):
-                    return
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = Server((host, 0), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    # -- lifecycle
-
-    def start(self) -> "KafkaBroker":
-        self._thread.start()
-        return self
-
-    def stop(self):
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+        conn_state = {"authenticated": self.sasl_users is None,
+                      "mechanism": None, "scram": None}
+        while True:
+            hdr = recv_exact(sock, 4)
+            if hdr is None:
+                return
+            (size,) = struct.unpack(">i", hdr)
+            payload = recv_exact(sock, size)
+            if payload is None:
+                return
+            # chaos hook: kill the connection mid-conversation (arm
+            # `kafka/drop-connection` with N*return(1)); producers must
+            # retry/reconnect like sarama's MaxRetry budget
+            # (`pkg/sink/kafka` defaultMaxRetry)
+            if failpoint.inject("kafka/drop-connection"):
+                return
+            sock.sendall(self._dispatch(payload, conn_state))
 
     @property
     def bootstrap(self) -> str:
         return f"{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts
-        (-> (cert_pem, key_pem), chained to broker.ca_pem)."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("broker is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name, client=True)
 
     # -- log access
 
@@ -956,16 +884,6 @@ class KafkaBroker:
 
 
 
-def _recv_exact(sock: socket.socket, n: int) -> bytes | None:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return bytes(buf)
-
-
 class _Group:
     """One consumer group's coordinator state (the broker-side half of
     the JoinGroup/SyncGroup dance). States mirror a real coordinator:
@@ -973,6 +891,11 @@ class _Group:
     (awaiting the leader's SyncGroup) -> Stable."""
 
     REBALANCE_WINDOW_S = 2.0
+    # InitialDelayedJoin (group.initial.rebalance.delay.ms): the first
+    # rebalance of an Empty group stays open this long after each join,
+    # so members that start together land in one generation instead of
+    # the first one completing alone and taking every partition
+    INITIAL_REBALANCE_DELAY_S = 0.3
 
     def __init__(self):
         self.lock = threading.Lock()
@@ -988,6 +911,7 @@ class _Group:
         self._next_member = 0
         # KIP-345 static membership: group.instance.id -> member_id
         self.static: dict[str, str] = {}
+        self._initial_until = 0.0  # InitialDelayedJoin hold (monotonic)
 
     def join(self, member_id: str, metadata: bytes,
              instance_id: str | None = None) -> dict:
@@ -1004,22 +928,26 @@ class _Group:
                 self.rebalancing = True
                 self.joined = {}
             self.joined[member_id] = metadata
-            my_generation = self.generation + 1
+            now = time.monotonic()
+            if not self.members:
+                self._initial_until = now + self.INITIAL_REBALANCE_DELAY_S
             # barrier: wait until every member of the PREVIOUS stable set
             # has rejoined (plus any newcomers), or the window lapses and
             # stragglers are evicted — then the first waiter completes
             # the rebalance for everyone
-            deadline = time.monotonic() + self.REBALANCE_WINDOW_S
+            deadline = now + self.REBALANCE_WINDOW_S
             while self.rebalancing:
-                expected = set(self.members) | set(self.joined)
-                if set(self.joined) >= expected:
-                    self._complete()
-                    break
-                remaining = deadline - time.monotonic()
-                if remaining <= 0:
+                now = time.monotonic()
+                if now >= deadline:
                     self._complete()  # evict stragglers
                     break
-                self.cond.wait(remaining)
+                if set(self.joined) >= set(self.members):
+                    if now >= self._initial_until:
+                        self._complete()
+                        break
+                    self.cond.wait(min(deadline, self._initial_until) - now)
+                else:
+                    self.cond.wait(deadline - now)
             if member_id not in self.members:
                 # a concurrent completion evicted us (joined after the
                 # window closed) — caller should retry

@@ -17,7 +17,7 @@ import socket
 import struct
 
 from ticdc_spark.codec import kafka_wire as kw
-from ticdc_spark.sinks.kafka_broker import _recv_exact
+from ticdc_spark.endpoint import recv_exact
 
 # GSSAPI credentials cache (see _sasl_auth): full-credentials key ->
 # (service ticket, session key).  Worker processes are reused across
@@ -107,11 +107,11 @@ class KafkaConn:
         flex = kw.is_flexible(api_key, api_version)
         frame = kw.frame_request_flex if flex else kw.frame_request
         self.sock.sendall(frame(api_key, api_version, corr, self.client_id, body))
-        hdr = _recv_exact(self.sock, 4)
+        hdr = recv_exact(self.sock, 4)
         if hdr is None:
             raise IOError("broker closed connection")
         (size,) = struct.unpack(">i", hdr)
-        payload = _recv_exact(self.sock, size)
+        payload = recv_exact(self.sock, size)
         if payload is None:
             raise IOError("broker closed connection mid-response")
         r = kw.Reader(payload)

@@ -17,70 +17,38 @@ operational policy, not of the wire format.
 
 from __future__ import annotations
 
-import socketserver
 import struct
-import threading
 
 from ticdc_spark.codec import krb5 as k
 from ticdc_spark.codec import krb5crypto as kc
+from ticdc_spark.endpoint import Endpoint, recv_exact
 
 
-class MiniKDC:
+class MiniKDC(Endpoint):
     def __init__(self, realm: str = "TEST.REALM",
                  principals: dict[str, str] | None = None,
                  host: str = "127.0.0.1"):
+        super().__init__(host)
         self.realm = realm
         self.principals = dict(principals or {})
         self.principals.setdefault(f"krbtgt/{realm}", "kdc-master-secret")
-        self.host = host
-        kdc = self
+        self._listen()
 
-        class Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                sock = self.request
-                try:
-                    while True:
-                        hdr = _recv_exact(sock, 4)
-                        if hdr is None:
-                            return
-                        (size,) = struct.unpack(">I", hdr)
-                        req = _recv_exact(sock, size)
-                        if req is None:
-                            return
-                        resp = kdc._dispatch(req)
-                        sock.sendall(struct.pack(">I", len(resp)) + resp)
-                except (ConnectionResetError, BrokenPipeError):
-                    return
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = Server((host, 0), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True)
+    def _serve(self, sock) -> None:
+        while True:
+            hdr = recv_exact(sock, 4)
+            if hdr is None:
+                return
+            (size,) = struct.unpack(">I", hdr)
+            req = recv_exact(sock, size)
+            if req is None:
+                return
+            resp = self._dispatch(req)
+            sock.sendall(struct.pack(">I", len(resp)) + resp)
 
     @property
     def address(self) -> str:
         return f"{self.host}:{self.port}"
-
-    def start(self) -> "MiniKDC":
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
 
     # -- keys
 
@@ -164,16 +132,6 @@ class MiniKDC:
                        rep_part))
 
 
-def _recv_exact(sock, n: int) -> bytes | None:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return bytes(buf)
-
-
 # ------------------------------------------------------------- client side
 
 
@@ -183,11 +141,11 @@ def _kdc_call(kdc_addr: str, req: bytes) -> bytes:
     host, port = kdc_addr.rsplit(":", 1)
     with socket.create_connection((host, int(port)), timeout=30) as sock:
         sock.sendall(struct.pack(">I", len(req)) + req)
-        hdr = _recv_exact(sock, 4)
+        hdr = recv_exact(sock, 4)
         if hdr is None:
             raise IOError("KDC closed connection")
         (size,) = struct.unpack(">I", hdr)
-        resp = _recv_exact(sock, size)
+        resp = recv_exact(sock, size)
         if resp is None:
             raise IOError("KDC closed mid-response")
         return resp

@@ -11,6 +11,8 @@ replaced by this repo's own wire client.
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,8 +71,8 @@ def _client(srv_endpoint: str, cred1: str, cred2: str, scheme: str = "s3"):
 # task, cached across tasks via worker reuse).  Keyed by pid so a
 # forked worker never inherits a parent's socket; endpoints are unique
 # per server instance (ephemeral port), so a stale entry is at worst
-# reconnected by the caller's retry path.
-_CLIENT_POOL: dict = {}
+# reconnected by the caller's retry path.  Least recently used first.
+_CLIENT_POOL: OrderedDict = OrderedDict()
 
 
 def _pooled_client(endpoint: str, cred1: str, cred2: str, scheme: str):
@@ -78,9 +80,11 @@ def _pooled_client(endpoint: str, cred1: str, cred2: str, scheme: str):
 
     key = (_os.getpid(), endpoint, cred1, cred2, scheme)
     c = _CLIENT_POOL.get(key)
-    if c is None:
+    if c is not None:
+        _CLIENT_POOL.move_to_end(key)
+    else:
         if len(_CLIENT_POOL) > 64:  # bound sockets held by a long worker
-            _, old = _CLIENT_POOL.popitem()
+            _, old = _CLIENT_POOL.popitem(last=False)
             try:
                 old.close()
             except Exception:  # noqa: BLE001

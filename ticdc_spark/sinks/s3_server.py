@@ -21,28 +21,21 @@ from __future__ import annotations
 import base64
 import hashlib
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlsplit
 
 from ticdc_spark.codec import awssig
+from ticdc_spark.endpoint import Endpoint, QuietHandler
 
 _XMLNS = "http://s3.amazonaws.com/doc/2006-03-01/"
 
 
-class MiniS3Server:
+class MiniS3Server(Endpoint):
     def __init__(self, access_key: str = "AKIDTEST", secret_key: str = "s3cr3t",
                  host: str = "127.0.0.1", tls: bool = False,
                  mutual_tls: bool = False):
-        # tls=True: an https:// endpoint with a fresh self-signed cert;
-        # mutual_tls=True demands a client certificate chained to the
-        # server's CA (mint one with issue_client_cert())
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._ca_key = None
+        super().__init__(host, tls, mutual_tls)
         self.access_key = access_key
         self.secret_key = secret_key
-        self.host = host
         self.buckets: dict[str, dict[str, bytes]] = {}
         # open multipart uploads: upload_id -> {bucket, key, parts{n: bytes}}
         self.uploads: dict[str, dict] = {}
@@ -50,23 +43,12 @@ class MiniS3Server:
         self._lock = threading.Lock()
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(QuietHandler):
             protocol_version = "HTTP/1.1"
-            # one response can flush in 2 TCP segments (headers,
-            # body); with Nagle on, the second segment waits for the
-            # client's delayed ACK — a flat ~40ms per request.
-            disable_nagle_algorithm = True
-
-            def log_message(self, *a):  # quiet
-                pass
 
             def _xml(self, code: int, body: str):
-                data = ('<?xml version="1.0" encoding="UTF-8"?>\n' + body).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/xml")
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
+                self.reply(code, ('<?xml version="1.0" encoding="UTF-8"?>\n'
+                                  + body).encode(), "application/xml")
 
             def _error(self, code: int, s3_code: str, message: str):
                 self._xml(code, f"<Error><Code>{s3_code}</Code>"
@@ -102,8 +84,7 @@ class MiniS3Server:
                 return bucket, key, parse_qs(sp.query, keep_blank_values=True)
 
             def do_PUT(self):
-                n = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(n)
+                body = self.read_body()
                 if not self._authed(body):
                     return
                 bucket, key, q = self._route()
@@ -119,11 +100,8 @@ class MiniS3Server:
                     return self._upload_part(bucket, key, q, body)
                 with srv._lock:
                     srv.buckets.setdefault(bucket, {})[key] = body
-                etag = hashlib.md5(body).hexdigest()
-                self.send_response(200)
-                self.send_header("ETag", f'"{etag}"')
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self.reply(200, headers={
+                    "ETag": f'"{hashlib.md5(body).hexdigest()}"'})
 
             def _get_upload(self, bucket: str, key: str, q: dict):
                 uid = q["uploadId"][0]
@@ -153,15 +131,11 @@ class MiniS3Server:
                     if up is None:
                         return
                     up["parts"][pn] = body
-                self.send_response(200)
-                self.send_header(
-                    "ETag", f'"{hashlib.md5(body).hexdigest()}"')
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self.reply(200, headers={
+                    "ETag": f'"{hashlib.md5(body).hexdigest()}"'})
 
             def do_POST(self):
-                n = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(n)
+                body = self.read_body()
                 if not self._authed(body):
                     return
                 bucket, key, q = self._route()
@@ -256,12 +230,8 @@ class MiniS3Server:
                     return self._error(404, "NoSuchKey",
                                        "The specified key does not exist.")
                 data = objs[key]
-                self.send_response(200)
-                self.send_header("Content-Type", "application/octet-stream")
-                self.send_header("Content-Length", str(len(data)))
-                self.send_header("ETag", f'"{hashlib.md5(data).hexdigest()}"')
-                self.end_headers()
-                self.wfile.write(data)
+                self.reply(200, data, "application/octet-stream", headers={
+                    "ETag": f'"{hashlib.md5(data).hexdigest()}"'})
 
             def do_HEAD(self):
                 if not self._authed(b""):
@@ -270,10 +240,7 @@ class MiniS3Server:
                 with srv._lock:
                     data = srv.buckets.get(bucket, {}).get(key)
                 if data is None:
-                    self.send_response(404)
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
-                    return
+                    return self.reply(404)
                 self.send_response(200)
                 self.send_header("Content-Length", str(len(data)))
                 self.end_headers()
@@ -291,9 +258,7 @@ class MiniS3Server:
                 else:
                     with srv._lock:
                         srv.buckets.get(bucket, {}).pop(key, None)
-                self.send_response(204)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self.reply(204)
 
             def _list(self, bucket: str, objs: dict[str, bytes], q: dict):
                 prefix = q.get("prefix", [""])[0]
@@ -322,51 +287,9 @@ class MiniS3Server:
                     f"<IsTruncated>{'true' if rest else 'false'}</IsTruncated>"
                     f"{next_tok}{contents}</ListBucketResult>"))
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from executor tasks; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = _Srv((host, 0), Handler)
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                ctx = tlsutil.server_context(cert_pem, key_pem)
-            self._server.socket = ctx.wrap_socket(
-                self._server.socket, server_side=True)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def start(self) -> "MiniS3Server":
-        self._thread.start()
-        return self
-
-    def stop(self):
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+        self._listen(Handler)
 
     @property
     def endpoint(self) -> str:
         scheme = "https" if self.tls else "http"
         return f"{scheme}://{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts
-        (-> (cert_pem, key_pem), chained to server.ca_pem)."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("server is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name, client=True)
